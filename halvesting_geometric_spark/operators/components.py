@@ -119,9 +119,10 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     start_round = 0
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        start_round = checkpoint.latest_iteration() + 1
-        cur = checkpoint.load_state(start_round - 1).persist(
+    last = checkpoint.latest_iteration() if resume and checkpoint is not None else None
+    if last is not None:
+        start_round = last + 1
+        cur = checkpoint.load_state(last).persist(
             StorageLevel.MEMORY_AND_DISK
         )
     prev_sig = _signature(cur)

@@ -76,9 +76,10 @@ def label_propagation(
     sym.count()
 
     start_iter = 0
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        start_iter = checkpoint.latest_iteration() + 1
-        labels = checkpoint.load_state(start_iter - 1)
+    last = checkpoint.latest_iteration() if resume and checkpoint is not None else None
+    if last is not None:
+        start_iter = last + 1
+        labels = checkpoint.load_state(last)
     else:
         labels = vertices.select(
             "vertex_id", F.col("vertex_id").alias("label")

@@ -6,7 +6,7 @@ one SAGE message-passing layer — gather = embedding lookup join
 scatter = per-destination aggregate (``.../modules/sage.py:53-54,78-82``) — but
 re-expressed as DataFrame joins + hash aggregates that Catalyst/AQE plan, with
 explicit skew handling (salting / Arrow bincount partials / hot-vertex
-broadcast) and per-iteration Iceberg/parquet checkpoints so any iteration is
+broadcast) and per-iteration parquet checkpoints so any iteration is
 resumable (north_rule).
 
 Semantics: classic damped PageRank with dangling-mass redistribution —
@@ -237,11 +237,12 @@ def pagerank(
         hot_edges.count(), cold_edges.count()
 
     start_iter = 0
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        start_iter = checkpoint.latest_iteration() + 1
+    last = checkpoint.latest_iteration() if resume and checkpoint is not None else None
+    if last is not None:
+        start_iter = last + 1
         # saved state is (vertex_id, rank); re-attach the loop-invariant
         # out_deg from the cached vertex table
-        ranks = checkpoint.load_state(start_iter - 1).join(vertices, "vertex_id")
+        ranks = checkpoint.load_state(last).join(vertices, "vertex_id")
         dangling = float(
             ranks.filter(F.col("out_deg") == 0)
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))

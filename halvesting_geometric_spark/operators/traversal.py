@@ -368,8 +368,8 @@ def sssp(
         raise ValueError(f"negative edge weight {neg}; sssp requires w >= 0")
 
     start_iter = 1
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        last = checkpoint.latest_iteration()
+    last = checkpoint.latest_iteration() if resume and checkpoint is not None else None
+    if last is not None:
         start_iter = last + 1
         dist = checkpoint.load_state(last).persist(StorageLevel.MEMORY_AND_DISK)
     else:

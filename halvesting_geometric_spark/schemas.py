@@ -83,19 +83,3 @@ TRIANGLES_SCHEMA = T.StructType(
         T.StructField("triangles", T.LongType(), False),
     ]
 )
-
-# Per-iteration metrics row — the convergence/lineage record each superstep
-# appends (engine-side; the reference's analog is the per-epoch AUROC logging
-# at /root/reference/.../modeling_link_prediction.py:156-158).
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("algorithm", T.StringType(), False),
-        T.StructField("iteration", T.IntegerType(), False),
-        T.StructField("delta_l1", T.DoubleType(), True),
-        T.StructField("delta_linf", T.DoubleType(), True),
-        T.StructField("changed", T.LongType(), True),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("checksum", T.LongType(), True),
-        T.StructField("wall_sec", T.DoubleType(), False),
-    ]
-)
